@@ -94,32 +94,15 @@ def star_tables(out_dir: str, sf: float, seed: int) -> dict[str, int]:
     return {"customer": n_cust, "orders": n_ord, "lineitem": n_li}
 
 
-def documents(
-    out_dir: str,
-    n_docs: int,
-    seed: int,
-    first_id: int = 0,
-    near_dup_share: float = 0.05,
-    exact_dup_share: float = 0.003,
-) -> int:
+def documents(out_dir: str, n_docs: int, seed: int, first_id: int = 0) -> int:
     """``documents``: space-separated tokens from a 30-word vocabulary,
-    10-100 tokens each. A ``near_dup_share`` of documents repeat an
-    earlier document's text plus the token ``dup`` (near-duplicates for
-    MinHash); an ``exact_dup_share`` repeat it verbatim (exact-dedup
-    groups). Doc ids are ``first_id .. first_id + n_docs - 1``."""
+    10-100 tokens each. Doc ids are ``first_id .. first_id + n_docs - 1``."""
     rng = np.random.default_rng(seed)
     vocab = np.array(VOCAB)
     lengths = rng.integers(10, 101, n_docs)
     toks = vocab[rng.integers(0, len(vocab), int(lengths.sum()))]
     bounds = np.cumsum(lengths)
     texts = [" ".join(t) for t in np.split(toks, bounds[:-1])]
-    kind = rng.random(n_docs)
-    src = rng.integers(0, np.maximum(np.arange(n_docs), 1))
-    for i in range(1, n_docs):
-        if kind[i] < near_dup_share:
-            texts[i] = texts[src[i]] + " dup"
-        elif kind[i] < near_dup_share + exact_dup_share:
-            texts[i] = texts[src[i]]
     ids = np.arange(first_id, first_id + n_docs, dtype=np.int64)
     docs = pa.table({
         "doc_id": ids,

@@ -11,7 +11,7 @@ returned. Phases:
 2. set-up (``setup_s``): session start, ``registry.load_all()``,
    catalog open and the workload's warm-up rounds;
 3. measured phase: whole rounds of operations until ``--seconds`` have
-   passed;
+   passed and the workload's minimum number of rounds has run;
 4. checks: every measured result against an answer computed outside
    the Spark engine (not timed). A wrong answer is a failed op.
 
@@ -50,7 +50,7 @@ END_TO_END = [
     ("cpu_s_per_op", "s"),
 ]
 
-PER_QUERY = workloads.CURATION_QUERIES + workloads.MEDIA_QUERIES
+PER_QUERY = workloads.MEDIA_QUERIES
 PER_LAYER = [
     ("session.start_s", "s"),
     ("registry.load_s", "s"),
@@ -241,7 +241,7 @@ def bench(wl: workloads.Workload, seconds: float, trace: bool, run_dir: str) -> 
         ops: list = []
         cpu0, m0 = layers.tree_cpu_s(me), time.perf_counter()
         rounds = 0
-        while rounds == 0 or time.perf_counter() - m0 < seconds:
+        while rounds < wl.min_rounds or time.perf_counter() - m0 < seconds:
             run_round(client, wl, f"round{rounds}", ops)
             rounds += 1
         elapsed, cpu1 = time.perf_counter() - m0, layers.tree_cpu_s(me)

@@ -1,10 +1,10 @@
 """Steadiness check: run workloads repeatedly and print each metric's spread.
 
     python3 perfbench/steady.py --runs 10 [--workloads cohort_serve,media_decode]
-                                [--first-seed 1] [--seconds 6] [--trace 0]
+                                [--first-seed 1] [--seconds 10]
 
 Run from the repository root. Each run is ``perfbench/run.py`` with a
-new seed. For every metric it prints the median, the quartiles
+new seed and tracing off. For every metric it prints the median, the quartiles
 (``statistics.quantiles(values, n=4)``) and the spread, the distance
 between the quartiles as a share of the median; the benchmark's bounds
 are set from these spreads. It also prints the share of failed
@@ -27,9 +27,9 @@ sys.path.insert(0, HERE)
 import workloads  # noqa: E402
 
 
-def one_run(workload: str, seed: int, seconds: float, trace: int) -> tuple[dict, dict, float]:
+def one_run(workload: str, seed: int, seconds: float) -> tuple[dict, dict, float]:
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     t0 = time.monotonic()
     proc = subprocess.run(cmd, capture_output=True, text=True, timeout=600)
     wall = time.monotonic() - t0
@@ -52,7 +52,6 @@ def main() -> int:
     ap.add_argument("--workloads", default=",".join(workloads.WORKLOADS))
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
 
     report = {}
@@ -61,7 +60,7 @@ def main() -> int:
         attempted = failed = 0
         walls = []
         for i in range(args.runs):
-            out, env, wall = one_run(wl, args.first_seed + i, args.seconds, args.trace)
+            out, env, wall = one_run(wl, args.first_seed + i, args.seconds)
             walls.append(wall)
             attempted += out["attempted"]
             failed += out["failed"]
@@ -70,8 +69,8 @@ def main() -> int:
             print(f"{wl} seed {args.first_seed + i}: wall {wall:.1f} s "
                   f"steal {env['steal_ticks'] / max(env['total_ticks'], 1):.3f} "
                   f"failed {out['failed']}/{out['attempted']} "
-                  + " ".join(f"{k}={m['value']:.4g}" for k, m in out["metrics"].items()
-                             if args.trace == 0), flush=True)
+                  + " ".join(f"{k}={m['value']:.4g}" for k, m in out["metrics"].items()),
+                  flush=True)
         report[wl] = {
             "failed_share": failed / attempted,
             "wall_s": summarize(walls) if len(walls) > 1 else walls,
